@@ -59,7 +59,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cminer_spark.operators.graph import _und_sym
+from cminer_spark.operators.graph import _und_sym, vertex_ids
 from cminer_spark.plans.checkpoint import truncate_lineage
 from cminer_spark.plans.loopconf import superstep_conf
 
@@ -111,16 +111,11 @@ def greedy_coloring(
     info = ColoringInfo()
     sym = _und_sym(edges).persist()
 
-    all_v = edges.select(F.col("src").alias("v_id")).union(
-        edges.select(F.col("dst").alias("v_id"))
-    )
-    if vertices is not None:
-        all_v = all_v.union(vertices.select("v_id"))
     deg = sym.groupBy(F.col("v").alias("v_id")).agg(
         F.count(F.lit(1)).alias("deg")
     )
     st = (
-        all_v.distinct()
+        vertex_ids(edges, vertices)
         .join(deg.hint("shuffle_hash"), "v_id", "left")
         .select(
             "v_id",

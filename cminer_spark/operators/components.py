@@ -23,6 +23,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cminer_spark.operators.graph import _und_sym, vertex_ids
 from cminer_spark.plans.checkpoint import SuperstepCheckpoint, truncate_lineage
 from cminer_spark.plans.loopconf import superstep_conf
 
@@ -152,15 +153,9 @@ def connected_components(
             F.min("component").alias("component")
         )
 
-        all_v = edges.select(F.col("src").alias("v_id")).union(
-            edges.select(F.col("dst").alias("v_id"))
-        )
-        if vertices is not None:
-            all_v = all_v.union(vertices.select("v_id"))
-        all_v = all_v.distinct()
-        labels = all_v.join(labels, "v_id", "left").select(
-            "v_id", F.coalesce("component", "v_id").alias("component")
-        )
+        labels = vertex_ids(edges, vertices).join(
+            labels, "v_id", "left"
+        ).select("v_id", F.coalesce("component", "v_id").alias("component"))
         # materialize once: the n_components probe and every caller
         # action (bench .count(), downstream joins) reuse the
         # checkpointed rows instead of re-running the label chain
@@ -268,19 +263,10 @@ def hashmin_components(
     graph diameter exceeds ``rounds``. The returned labels are still
     the ``rounds``-round result (the probe round is discarded), so
     fixed-round oracles keep matching."""
-    sym = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .distinct()
+    sym = _und_sym(edges).toDF("u", "v").persist()
+    labels = vertex_ids(edges, vertices).select(
+        "v_id", F.col("v_id").alias("component")
     )
-    sym = sym.union(sym.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct()
-    all_v = edges.select(F.col("src").alias("v_id")).union(
-        edges.select(F.col("dst").alias("v_id"))
-    )
-    if vertices is not None:
-        all_v = all_v.union(vertices.select("v_id"))
-    labels = all_v.distinct().select("v_id", F.col("v_id").alias("component"))
-    sym = sym.persist()
     n_sym = sym.count()
     with superstep_conf(edges.sparkSession, n_sym):
         for _ in range(rounds):

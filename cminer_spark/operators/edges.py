@@ -71,7 +71,8 @@ def _edges_from_batch(pdf: pd.DataFrame) -> pd.DataFrame:
     ``src_turn - 1`` — non-dense turn indices pair correctly); an
     ``invokes`` edge is ``(conv_id, src_turn, NULL, tool)``. All work
     is numpy slice/mask arithmetic — no per-row Python, no string
-    allocation; key strings + hashes are built JVM-side.
+    allocation; key strings + hashes are built JVM-side. Kept as the
+    readable reference the Arrow kernel is parity-tested against.
     """
     import numpy as np
 
@@ -290,15 +291,11 @@ def extract_edges(
     transcripts: DataFrame,
     partitions: int | None = None,
     with_parallel_keys: bool = False,
-    use_arrow: bool = True,
     pre_partitioned: bool = False,
 ) -> DataFrame:
     """Transcripts → edge table ``(src, dst, type, key, weight,
     src_key, dst_key)``.
 
-    ``use_arrow=False`` routes the pairing through the pandas twin
-    kernel (same semantics, kept as the readable reference
-    implementation) — used by the kernel A/B benchmarks.
     ``pre_partitioned=True`` asserts conversations are already
     co-located per partition (a ``conv_id``-bucketed transcripts
     table — :func:`cminer_spark.sources.bucketed
@@ -311,21 +308,16 @@ def extract_edges(
         partitions,
         pre_partitioned,
     )
-    if use_arrow:
-        raw = prepared.mapInArrow(
-            _conv_stream_kernel_arrow(_edges_from_arrow), schema=_KERNEL_SCHEMA
-        )
-    else:
-        raw = prepared.mapInPandas(
-            _conv_stream_kernel(_edges_from_batch), schema=_KERNEL_SCHEMA
-        )
+    raw = prepared.mapInArrow(
+        _conv_stream_kernel_arrow(_edges_from_arrow), schema=_KERNEL_SCHEMA
+    )
     return _finalize_edges(raw, with_parallel_keys)
 
 
 def _finalize_edges(raw: DataFrame, with_parallel_keys: bool) -> DataFrame:
     """Compact kernel columns ``(conv_id, src_turn, dst_turn, tool)``
     → the edge table. Key strings + ``xxhash64`` in whole-stage
-    codegen; shared by the Arrow/pandas kernels and the SQL twin."""
+    codegen; shared by the Arrow kernel and the SQL twin."""
     src_key = F.concat_ws("#", "conv_id", "src_turn")
     dst_key = F.when(
         F.col("tool").isNotNull(), F.concat(F.lit("tool:"), F.col("tool"))

@@ -1,4 +1,6 @@
-"""Graph-structural layer: degrees, hub detection, CSR adjacency blocks.
+"""Graph-structural layer: degrees, hub detection, CSR adjacency blocks,
+and the pieces the superstep operators share (vertex set, hot-key
+salting probe, salted gather).
 
 Reference parity: per-label in/out degrees are the reference's
 ``tot_deg/in_deg/out_deg`` and ``t_in_deg/t_out_deg``
@@ -61,10 +63,11 @@ def hub_vertices(edges: DataFrame, quantile: float = 0.99, factor: float = 4.0) 
     tools / celebrity vertices) and safe to broadcast.
 
     This is a standalone skew DIAGNOSTIC (relative skew: who stands
-    out). ``pagerank``'s auto-salting deliberately probes an ABSOLUTE
-    per-reducer bound instead — a graph with several equally-hot
-    destinations has no relative hubs (max ≤ factor × p99) but still
-    needs salting — so the two probes answer different questions.
+    out). The superstep operators' auto-salting (:func:`hot_key_salt`)
+    deliberately probes an ABSOLUTE per-reducer bound instead — a graph
+    with several equally-hot destinations has no relative hubs (max ≤
+    factor × p99) but still needs salting — so the two probes answer
+    different questions.
     """
     in_d = edges.groupBy(F.col("dst").alias("v_id")).agg(
         F.count(F.lit(1)).alias("in_deg")
@@ -74,6 +77,85 @@ def hub_vertices(edges: DataFrame, quantile: float = 0.99, factor: float = 4.0) 
     ).collect()[0]["q"]
     threshold = max(float(q or 1.0) * factor, 1.0)
     return in_d.where(F.col("in_deg") > F.lit(threshold))
+
+
+def vertex_ids(edges: DataFrame, vertices: DataFrame | None = None) -> DataFrame:
+    """Distinct ``v_id`` over both endpoints of ``edges(src, dst)``,
+    plus ``vertices(v_id)`` when given (isolated vertices)."""
+    ids = edges.select(F.col("src").alias("v_id")).union(
+        edges.select(F.col("dst").alias("v_id"))
+    )
+    if vertices is not None:
+        ids = ids.union(vertices.select("v_id"))
+    return ids.distinct()
+
+
+def hot_key_salt(
+    adj: DataFrame, keys: list[str], n_edges: int, shuffle_parts: int
+) -> int:
+    """Salt count for :func:`salted_gather`: 16 when any value of any
+    of ``keys`` (the gather's group columns) occurs on more than
+    ``max(10·n_edges/shuffle_parts, 1000)`` rows of ``adj``, else 1.
+
+    A key is "hot" when its row count dwarfs the average
+    per-shuffle-partition share (partial map-side aggregation already
+    bounds per-mapper load; salting bounds the reducer key). The bar is
+    ABSOLUTE on purpose: a graph with several equally-hot keys has no
+    RELATIVE hubs yet still needs its reducer keys bounded, so the
+    quantile-based :func:`hub_vertices` stays a diagnostic. One
+    aggregate job per key. ``shuffle_parts`` is the session setting,
+    not the loop-scoped one.
+    """
+    hot_bar = max(10 * n_edges // max(shuffle_parts, 1), 1000)
+    max_deg = max(
+        adj.groupBy(k).count().agg(F.max("count")).collect()[0][0] or 0
+        for k in keys
+    )
+    return 16 if max_deg > hot_bar else 1
+
+
+def salted_gather(
+    adj: DataFrame,
+    scores: DataFrame,
+    key: str,
+    group: str,
+    salt_partitions: int = 1,
+) -> DataFrame:
+    """One gather over ``adj(src, dst, w)``: join ``scores(v_id,
+    score)`` on ``key``, sum ``w·score`` per ``group``. Returns
+    ``(v_id, x)`` with ``v_id`` the group value.
+
+    The scores side is hinted ``shuffle_hash``: it usually comes from a
+    checkpoint scan with unknown stats, so Catalyst would otherwise
+    pick a sort-merge join and re-sort the persisted adjacency every
+    superstep. With ``salt_partitions`` k > 1 the sum runs in two
+    stages — pre-aggregate on ``(group, pmod(xxhash64(key), k))``, then
+    finalize on ``group`` — so a hub group is spread over k reducer
+    keys first (explicit skew handling; see :func:`hot_key_salt`).
+    """
+    salted = salt_partitions > 1
+    contribs = adj.join(
+        scores.select(F.col("v_id").alias(key), "score").hint("shuffle_hash"),
+        key,
+    ).select(
+        group,
+        (F.col("w") * F.col("score")).alias("m"),
+        *(
+            [F.pmod(F.xxhash64(key), F.lit(salt_partitions)).alias("salt")]
+            if salted
+            else []
+        ),
+    )
+    if salted:
+        sums = (
+            contribs.groupBy(group, "salt")
+            .agg(F.sum("m").alias("c"))
+            .groupBy(group)
+            .agg(F.sum("c").alias("x"))
+        )
+    else:
+        sums = contribs.groupBy(group).agg(F.sum("m").alias("x"))
+    return sums.withColumnRenamed(group, "v_id")
 
 
 def csr_blocks(edges: DataFrame, n_blocks: int | None = None) -> DataFrame:

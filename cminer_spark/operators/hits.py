@@ -15,9 +15,10 @@ judge-audited plan shape):
   hash-partitioned on ``src`` (probed by the hub vector), one on
   ``dst`` (probed by the auth vector) — so no superstep ever shuffles
   the |E|-sized graph, only the |V|-sized score vectors;
-* both half-step aggregations get optional two-stage salting
-  (pre-aggregate on ``(key, hash(other)%k)``) with the same absolute
-  hot-key auto-probe as PageRank, bounding any single reducer key on
+* both half-steps are PageRank's gather
+  (:func:`~cminer_spark.operators.graph.salted_gather`), with optional
+  two-stage salting (pre-aggregate on ``(key, hash(other)%k)``) and the
+  same absolute hot-key auto-probe, bounding any single reducer key on
   hub-dominated transcript graphs;
 * the L1 normalizer is a 1-row broadcast cross join computed in-plan
   from the persisted half-step sums (no extra scan);
@@ -37,6 +38,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cminer_spark.operators.graph import hot_key_salt, salted_gather, vertex_ids
 from cminer_spark.plans.checkpoint import (
     EphemeralStateStore,
     SuperstepCheckpoint,
@@ -54,33 +56,6 @@ class HITSInfo:
     n_edges: int = 0
     resumed_from: int | None = None
     salted: bool = False
-
-
-def _half_step(adj, scores, join_key, group_key, score_col, salt_partitions):
-    """One HITS half-step: join scores on ``join_key``, sum
-    ``w·score`` per ``group_key`` (two-stage when salted)."""
-    contribs = adj.join(
-        scores.select(F.col("v_id").alias(join_key), score_col).hint(
-            "shuffle_hash"
-        ),
-        join_key,
-    ).select(
-        group_key,
-        (F.col("w") * F.col(score_col)).alias("m"),
-        *(
-            [F.pmod(F.xxhash64(join_key), F.lit(salt_partitions)).alias("salt")]
-            if salt_partitions > 1
-            else []
-        ),
-    )
-    if salt_partitions > 1:
-        return (
-            contribs.groupBy(group_key, "salt")
-            .agg(F.sum("m").alias("c"))
-            .groupBy(group_key)
-            .agg(F.sum("c").alias("x"))
-        )
-    return contribs.groupBy(group_key).agg(F.sum("m").alias("x"))
 
 
 def hits(
@@ -136,13 +111,7 @@ def hits(
         adj_src = pairs.repartition(iter_parts, "src").persist()
         adj_dst = pairs.repartition(iter_parts, "dst").persist()
 
-    verts = (
-        pairs.select(F.col("src").alias("v_id"))
-        .union(pairs.select(F.col("dst").alias("v_id")))
-    )
-    if vertices is not None:
-        verts = verts.union(vertices.select("v_id"))
-    verts = verts.distinct().persist()
+    verts = vertex_ids(pairs, vertices).persist()
     n = verts.count()
     info.n_vertices = n
     if n == 0 or n_raw == 0:
@@ -161,14 +130,9 @@ def hits(
     # Same absolute hot-key bar as pagerank: bound the reducer keys of
     # BOTH aggregations (auth groups by dst, hub groups by src).
     if salt_partitions is None:
-        hot_bar = max(10 * n_raw // max(shuffle_parts, 1), 1000)
-        max_in = (
-            adj_src.groupBy("dst").count().agg(F.max("count")).collect()[0][0]
+        salt_partitions = hot_key_salt(
+            adj_src, ["dst", "src"], n_raw, shuffle_parts
         )
-        max_out = (
-            adj_src.groupBy("src").count().agg(F.max("count")).collect()[0][0]
-        )
-        salt_partitions = 16 if max((max_in or 0), (max_out or 0)) > hot_bar else 1
     info.salted = salt_partitions > 1
 
     check_convergence = tol > 0.0
@@ -205,16 +169,16 @@ def hits(
     with superstep_conf(spark, n_raw):
         for it in range(start_iter + 1, max_iter + 1):
             # auth half-step: gather hub mass along edges (group by dst)
-            araw = _half_step(
-                adj_src, state, "src", "dst", "hub", salt_partitions
+            araw = salted_gather(
+                adj_src,
+                state.select("v_id", F.col("hub").alias("score")),
+                "src",
+                "dst",
+                salt_partitions,
             ).persist()
             asum = araw.agg(F.sum("x").alias("s"))
             auth = (
-                verts.join(
-                    araw.withColumnRenamed("dst", "v_id").hint("shuffle_hash"),
-                    "v_id",
-                    "left",
-                )
+                verts.join(araw.hint("shuffle_hash"), "v_id", "left")
                 .crossJoin(F.broadcast(asum))
                 .select(
                     "v_id",
@@ -222,17 +186,17 @@ def hits(
                 )
             ).persist()
             # hub half-step: scatter the NEW auth back along edges
-            hraw = _half_step(
-                adj_dst, auth, "dst", "src", "auth", salt_partitions
+            hraw = salted_gather(
+                adj_dst,
+                auth.select("v_id", F.col("auth").alias("score")),
+                "dst",
+                "src",
+                salt_partitions,
             ).persist()
             hsum = hraw.agg(F.sum("x").alias("s"))
             new_state = (
                 state.select("v_id", F.col("hub").alias("hub_prev"), F.col("auth").alias("auth_prev"))
-                .join(
-                    hraw.withColumnRenamed("src", "v_id").hint("shuffle_hash"),
-                    "v_id",
-                    "left",
-                )
+                .join(hraw.hint("shuffle_hash"), "v_id", "left")
                 .join(auth.hint("shuffle_hash"), "v_id")
                 .crossJoin(F.broadcast(hsum))
                 .select(

@@ -18,6 +18,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cminer_spark.operators.graph import _und_sym, vertex_ids
 from cminer_spark.plans.checkpoint import SuperstepCheckpoint, truncate_lineage
 from cminer_spark.plans.loopconf import superstep_conf
 
@@ -78,19 +79,8 @@ def label_propagation(
     """
     info = LPAInfo()
 
-    sym = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .distinct()
-    )
-    sym = sym.union(sym.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct().persist()
-
-    all_v = edges.select(F.col("src").alias("v_id")).union(
-        edges.select(F.col("dst").alias("v_id"))
-    )
-    if vertices is not None:
-        all_v = all_v.union(vertices.select("v_id"))
-    all_v = all_v.distinct().persist()
+    sym = _und_sym(edges).toDF("u", "v").persist()
+    all_v = vertex_ids(edges, vertices).persist()
 
     if initial_labels is not None:
         labels = all_v.join(initial_labels, "v_id", "left").select(

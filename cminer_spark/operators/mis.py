@@ -50,7 +50,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cminer_spark.operators.graph import _und_sym
+from cminer_spark.operators.graph import _und_sym, vertex_ids
 from cminer_spark.plans.checkpoint import SuperstepCheckpoint, truncate_lineage
 from cminer_spark.plans.loopconf import superstep_conf
 
@@ -93,14 +93,9 @@ def maximal_independent_set(
 
     sym = _und_sym(edges).persist()
 
-    all_v = edges.select(F.col("src").alias("v_id")).union(
-        edges.select(F.col("dst").alias("v_id"))
+    st = vertex_ids(edges, vertices).select(
+        "v_id", F.lit(UNDECIDED).alias("status")
     )
-    if vertices is not None:
-        all_v = all_v.union(vertices.select("v_id"))
-    all_v = all_v.distinct()
-
-    st = all_v.select("v_id", F.lit(UNDECIDED).alias("status"))
 
     start_round = 0
     if checkpoint is not None:

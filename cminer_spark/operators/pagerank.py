@@ -38,6 +38,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cminer_spark.operators.graph import hot_key_salt, salted_gather, vertex_ids
 from cminer_spark.plans.checkpoint import (
     EphemeralStateStore,
     SuperstepCheckpoint,
@@ -68,7 +69,6 @@ def pagerank(
     checkpoint: SuperstepCheckpoint | None = None,
     salt_partitions: int | None = None,
     weight_col: str = "weight",
-    use_csr: bool = False,
     seeds: list | None = None,
     init_ranks: DataFrame | None = None,
 ) -> tuple[DataFrame, PageRankInfo]:
@@ -79,11 +79,6 @@ def pagerank(
     detected; 0/1 = off; k>1 = two-stage salted aggregation.
     ``tol <= 0`` runs exactly ``max_iter`` supersteps with no
     convergence aggregate (fixed-k mode).
-    ``use_csr``: gather from row-per-source CSR adjacency blocks
-    (:func:`cminer_spark.operators.graph.csr_blocks` shape) — the rank
-    join probes |V| wide rows instead of |E| flat rows, the |E|-sized
-    explode happens map-side after the join. A/B timings live in
-    BENCH/BASELINE.md; the flat representation is the default.
     ``seeds``: PERSONALIZED PageRank (random walk with restart) — the
     reset vector is uniform over the given vertex ids instead of over
     all vertices. The conservation-invariant dangling trick is
@@ -103,6 +98,8 @@ def pagerank(
     """
     import time
 
+    from pyspark.sql import Observation, Window
+
     t_setup = time.time()
     spark = edges.sparkSession
     info = PageRankInfo()
@@ -115,11 +112,11 @@ def pagerank(
     # every superstep schedules one task per adjacency partition, so a
     # 60k-edge graph spread over 64 partitions pays 64 task launches
     # per superstep for sub-millisecond work each (measured ~6s/step
-    # fixed cost on the sf0.1 events graph). ~250k edges/partition
-    # keeps tasks meaningful; the cap at spark.sql.shuffle.partitions
-    # preserves the large-graph plan (66M edges still gets the full
-    # 2×cores spread — the scaling campaign is unaffected).
-    # superstep_conf additionally turns AQE off and sizes
+    # fixed cost on the sf0.1 events graph). superstep_conf sizes the
+    # partitions at loopconf.ROWS_PER_PARTITION edges each, capped at
+    # spark.sql.shuffle.partitions so the large-graph plan is preserved
+    # (66M edges still gets the full 2×cores spread — the scaling
+    # campaign is unaffected). It additionally turns AQE off and sets
     # spark.sql.shuffle.partitions to the same graph-derived count for
     # the loop's duration (plans/loopconf.py): every superstep is then
     # ONE scheduler job instead of ~10 AQE query-stage jobs.
@@ -134,402 +131,269 @@ def pagerank(
     n_raw = pairs.count()
     info.n_edges = n_raw
     with superstep_conf(spark, n_raw) as iter_parts:
-        return _pagerank_run(
-            spark,
-            info,
-            pairs,
-            iter_parts,
-            shuffle_parts,
-            damping,
-            tol,
-            max_iter,
-            vertices,
-            checkpoint,
-            salt_partitions,
-            use_csr,
-            seeds,
-            init_ranks,
-            t_setup,
-        )
-
-
-def _pagerank_run(
-    spark,
-    info: PageRankInfo,
-    pairs: DataFrame,
-    iter_parts: int,
-    shuffle_parts: int,
-    damping: float,
-    tol: float,
-    max_iter: int,
-    vertices: DataFrame | None,
-    checkpoint: SuperstepCheckpoint | None,
-    salt_partitions: int | None,
-    use_csr: bool,
-    seeds: list | None,
-    init_ranks: DataFrame | None,
-    t_setup: float,
-) -> tuple[DataFrame, PageRankInfo]:
-    import time
-
-    # Normalized adjacency, built once, in ONE shuffle: hash-partition
-    # on src, then a whole-partition window total per src divides each
-    # edge weight in place (the window's required distribution is
-    # satisfied by the explicit repartition, so Catalyst adds no second
-    # exchange — 4.6x faster setup than the groupBy+join formulation).
-    # Parallel multigraph edges stay as rows; the per-superstep
-    # contribution aggregation re-sums them at dst, so the stochastic
-    # matrix is identical (cross-checked to 1e-12 in tests).
-    from pyspark.sql import Window
-
-    out_w = F.sum("w").over(Window.partitionBy("src"))
-    norm = (
-        pairs.repartition(iter_parts, "src")
-        .withColumn("p", F.col("w") / out_w)
-        .select("src", "dst", "p")
-    )
-    if use_csr:
-        # CSR adjacency blocks (graph.csr_blocks shape): one row per
-        # source, neighbor list inline, range-partitioned by src
+        # Normalized adjacency ``(src, dst, w)``, built once, in ONE
+        # shuffle: hash-partition on src, then a whole-partition window
+        # total per src divides each edge weight in place (the window's
+        # required distribution is satisfied by the explicit
+        # repartition, so Catalyst adds no second exchange — 4.6x
+        # faster setup than the groupBy+join formulation). Parallel
+        # multigraph edges stay as rows; the per-superstep contribution
+        # aggregation re-sums them at dst, so the stochastic matrix is
+        # identical (cross-checked to 1e-12 in tests).
+        out_w = F.sum("w").over(Window.partitionBy("src"))
         adj = (
-            norm.repartitionByRange(iter_parts, "src")
-            .sortWithinPartitions("src", "dst")
-            .groupBy("src")
-            .agg(F.collect_list(F.struct("dst", "p")).alias("adj"))
+            pairs.repartition(iter_parts, "src")
+            .withColumn("w", F.col("w") / out_w)
             .persist()
         )
-    else:
-        adj = norm.persist()
 
-    verts = pairs.select(F.col("src").alias("v_id")).union(
-        pairs.select(F.col("dst").alias("v_id"))
-    )
-    if vertices is not None:
-        verts = verts.union(vertices.select("v_id"))
-    verts = verts.distinct().persist()
-    n = verts.count()
-    info.n_vertices = n
-    if n == 0:
-        adj.unpersist()
-        verts.unpersist()
-        return spark.createDataFrame([], "v_id long, rank double"), info
+        verts = vertex_ids(pairs, vertices).persist()
+        n = verts.count()
+        info.n_vertices = n
+        if n == 0:
+            adj.unpersist()
+            verts.unpersist()
+            return spark.createDataFrame([], "v_id long, rank double"), info
 
-    # Salting decision: a destination is "hot" when its in-degree
-    # dwarfs the average per-shuffle-partition share (partial map-side
-    # aggregation already bounds per-mapper load; salting bounds the
-    # reducer key). The ABSOLUTE bar is deliberate — a graph with
-    # several equally-hot destinations has no RELATIVE hubs (max ≤
-    # 4×p99) yet still needs its reducer keys bounded, so the
-    # quantile-based graph.hub_vertices probe stays a standalone
-    # diagnostic rather than the gate here. In CSR mode the in-degrees
-    # come from exploding the persisted blocks, not from recomputing
-    # the normalization shuffle.
-    if salt_partitions is None:
-        hot_bar = max(10 * info.n_edges // max(shuffle_parts, 1), 1000)
-        in_deg_src = (
-            adj.select(F.explode(F.col("adj.dst")).alias("dst"))
-            if use_csr
-            else adj
-        )
-        max_in = (
-            in_deg_src.groupBy("dst").count().agg(F.max("count")).collect()[0][0]
-        )
-        salt_partitions = 16 if (max_in or 0) > hot_bar else 1
-    info.salted = salt_partitions > 1
-    if info.salted:
-        adj_salted = adj.withColumn(
-            "salt", F.pmod(F.xxhash64("src"), F.lit(salt_partitions))
-        ).persist()
-        adj_salted.count()
-        adj.unpersist()
-        adj = adj_salted
-
-    # state: (v_id, rank). The dangling mass each superstep is NOT a
-    # separate scan: power iteration preserves Σrank = 1 exactly (up
-    # to ~1e-16/step float drift), so dangling = 1 - Σ in_mass — one
-    # scalar aggregate over the already-computed sums.
-    # reset vector: uniform 1/n, or uniform over the seed set
-    # (personalized). The uniform branch keeps its original literal
-    # arithmetic so un-seeded results stay bit-identical.
-    if seeds is not None:
-        if not seeds:
-            raise ValueError("seeds must be a non-empty vertex-id list")
-        seed_list = sorted({int(s) for s in seeds})
-        # every seed must exist in the graph: an absent seed silently
-        # shrinks Σreset below 1, breaking the Σrank = 1 conservation
-        # invariant the dangling-mass computation depends on, so all
-        # ranks would drift instead of erroring
-        present = {
-            r.v_id
-            for r in verts.where(F.col("v_id").isin(seed_list)).collect()
-        }
-        missing = [s for s in seed_list if s not in present]
-        if missing:
-            raise ValueError(
-                f"personalization seeds not in graph: {missing[:10]}"
-                + (" ..." if len(missing) > 10 else "")
+        # the gather groups by dst, so hot destinations decide salting
+        if salt_partitions is None:
+            salt_partitions = hot_key_salt(
+                adj, ["dst"], info.n_edges, shuffle_parts
             )
-        reset = F.when(
-            F.col("v_id").isin(seed_list), F.lit(1.0 / len(seed_list))
-        ).otherwise(F.lit(0.0))
-    else:
-        reset = None
+        info.salted = salt_partitions > 1
 
-    check_convergence = tol > 0.0
-    start_iter = 0
-    if init_ranks is not None:
-        # warm start: prior ranks where known, 1/n elsewhere, then
-        # renormalized so Σrank = 1 exactly (the conservation-invariant
-        # dangling computation depends on it)
-        warm = verts.join(
-            init_ranks.select("v_id", F.col("rank").alias("_r0")),
-            "v_id",
-            "left",
-        ).select(
-            "v_id", F.coalesce("_r0", F.lit(1.0 / n)).alias("_r1")
-        )
-        warm = warm.persist()
-        total0 = warm.agg(F.sum("_r1")).collect()[0][0] or 1.0
-        state = warm.select(
-            "v_id", (F.col("_r1") / F.lit(float(total0))).alias("rank")
-        )
-        state = truncate_lineage(state)
-        warm.unpersist()
-    else:
-        state = verts.select(
-            "v_id",
-            (reset if reset is not None else F.lit(1.0 / n)).alias("rank"),
-        )
-    if checkpoint is not None:
-        resume = checkpoint.latest()
-        if resume is not None:
-            start_iter, state, _meta = resume
-            state = state.select("v_id", "rank")
-            info.resumed_from = start_iter
-            # If the resumed-from superstep already met the convergence
-            # criterion, STOP: an uninterrupted run returned exactly
-            # this state, and running one "extra" superstep would drift
-            # the ranks past it (resume must equal fresh).
-            last_delta = (_meta.get("metrics") or {}).get("l1_delta")
-            if (
-                check_convergence
-                and last_delta is not None
-                and last_delta < n * tol
-            ):
-                info.iterations = start_iter
-                info.converged = True
-                info.deltas.append(last_delta)
-                adj.unpersist()
-                verts.unpersist()
-                return state.select("v_id", "rank"), info
-    state = truncate_lineage(state)
-    info.setup_sec = round(time.time() - t_setup, 3)
-    store = EphemeralStateStore(spark, "pagerank") if checkpoint is None else None
-
-    if not check_convergence and checkpoint is None:
-        # ---- fixed-k ephemeral fast path: ONE job per superstep ----
-        # State stores the raw in-mass ``im``; the rank is materialized
-        # lazily as ``teleport + d·(im + dmass·reset)`` with ``dmass``
-        # a driver-side literal taken from an Observation riding the
-        # state write. Per-row arithmetic is unchanged (a literal and a
-        # broadcast column hold the same double), so ranks are
-        # bit-identical to the broadcast formulation — but the dangling
-        # broadcast job and the sums persist/unpersist are gone: the
-        # whole superstep is the state-write job.
-        from pyspark.sql import Observation
-
-        if reset is not None:
-            teleport_c = F.lit(1.0 - damping) * reset
-
-            def rank_of(dm):
-                return teleport_c + F.lit(damping) * (
-                    F.col("im") + F.lit(dm) * reset
+        # state: (v_id, rank). The dangling mass each superstep is NOT
+        # a separate scan: power iteration preserves Σrank = 1 exactly
+        # (up to ~1e-16/step float drift), so dangling = 1 - Σ in_mass
+        # — one scalar aggregate over the already-computed sums.
+        # reset vector: uniform 1/n, or uniform over the seed set
+        # (personalized). The uniform branch keeps its original literal
+        # arithmetic so un-seeded results stay bit-identical.
+        if seeds is not None:
+            if not seeds:
+                raise ValueError("seeds must be a non-empty vertex-id list")
+            seed_list = sorted({int(s) for s in seeds})
+            # every seed must exist in the graph: an absent seed
+            # silently shrinks Σreset below 1, breaking the Σrank = 1
+            # conservation invariant the dangling-mass computation
+            # depends on, so all ranks would drift instead of erroring
+            present = {
+                r.v_id
+                for r in verts.where(F.col("v_id").isin(seed_list)).collect()
+            }
+            missing = [s for s in seed_list if s not in present]
+            if missing:
+                raise ValueError(
+                    f"personalization seeds not in graph: {missing[:10]}"
+                    + (" ..." if len(missing) > 10 else "")
                 )
-
+            reset = F.when(
+                F.col("v_id").isin(seed_list), F.lit(1.0 / len(seed_list))
+            ).otherwise(F.lit(0.0))
         else:
-            teleport_c = F.lit((1.0 - damping) / n)
+            reset = None
 
-            def rank_of(dm):
-                return teleport_c + F.lit(damping) * (
-                    F.col("im") + F.lit(dm) / n
-                )
-
-        state_rank = F.col("rank")
-        for it in range(1, max_iter + 1):
-            t_step = time.time()
-            joined = adj.join(
-                state.select(
-                    F.col("v_id").alias("src"), state_rank.alias("rank")
-                ).hint("shuffle_hash"),
-                "src",
-            )
-            salt_cols = ["salt"] if info.salted else []
-            if use_csr:
-                contribs = joined.select(
-                    *salt_cols, F.col("rank"), F.explode("adj").alias("a")
-                ).select(
-                    *salt_cols,
-                    F.col("a.dst").alias("dst"),
-                    (F.col("a.p") * F.col("rank")).alias("m"),
-                )
-            else:
-                contribs = joined.select(
-                    *salt_cols, "dst", (F.col("p") * F.col("rank")).alias("m")
-                )
-            if info.salted:
-                sums = (
-                    contribs.groupBy("dst", "salt")
-                    .agg(F.sum("m").alias("c"))
-                    .groupBy("dst")
-                    .agg(F.sum("c").alias("in_mass"))
-                )
-            else:
-                sums = contribs.groupBy("dst").agg(F.sum("m").alias("in_mass"))
-            new_state = verts.join(
-                sums.withColumnRenamed("dst", "v_id").hint("shuffle_hash"),
+        check_convergence = tol > 0.0
+        start_iter = 0
+        if init_ranks is not None:
+            # warm start: prior ranks where known, 1/n elsewhere, then
+            # renormalized so Σrank = 1 exactly (the conservation-
+            # invariant dangling computation depends on it)
+            warm = verts.join(
+                init_ranks.select("v_id", F.col("rank").alias("_r0")),
                 "v_id",
                 "left",
             ).select(
-                "v_id", F.coalesce("in_mass", F.lit(0.0)).alias("im")
+                "v_id", F.coalesce("_r0", F.lit(1.0 / n)).alias("_r1")
             )
-            obs = Observation(f"pr_dm_{it}_{id(store)}")
-            saved = store.save(
-                new_state.observe(obs, F.sum("im").alias("s")), it
+            warm = warm.persist()
+            total0 = warm.agg(F.sum("_r1")).collect()[0][0] or 1.0
+            state = warm.select(
+                "v_id", (F.col("_r1") / F.lit(float(total0))).alias("rank")
             )
-            dmass = 1.0 - float(obs.get["s"] or 0.0)
-            state = saved
-            state_rank = rank_of(dmass)
+            state = truncate_lineage(state)
+            warm.unpersist()
+        else:
+            state = verts.select(
+                "v_id",
+                (reset if reset is not None else F.lit(1.0 / n)).alias("rank"),
+            )
+        if checkpoint is not None:
+            resume = checkpoint.latest()
+            if resume is not None:
+                start_iter, state, _meta = resume
+                state = state.select("v_id", "rank")
+                info.resumed_from = start_iter
+                # If the resumed-from superstep already met the
+                # convergence criterion, STOP: an uninterrupted run
+                # returned exactly this state, and running one "extra"
+                # superstep would drift the ranks past it (resume must
+                # equal fresh).
+                last_delta = (_meta.get("metrics") or {}).get("l1_delta")
+                if (
+                    check_convergence
+                    and last_delta is not None
+                    and last_delta < n * tol
+                ):
+                    info.iterations = start_iter
+                    info.converged = True
+                    info.deltas.append(last_delta)
+                    adj.unpersist()
+                    verts.unpersist()
+                    return state.select("v_id", "rank"), info
+        state = truncate_lineage(state)
+        info.setup_sec = round(time.time() - t_setup, 3)
+        store = (
+            EphemeralStateStore(spark, "pagerank") if checkpoint is None else None
+        )
+
+        if not check_convergence and checkpoint is None:
+            # ---- fixed-k ephemeral fast path: ONE job per superstep ----
+            # State stores the raw in-mass ``im``; the rank is
+            # materialized lazily as ``teleport + d·(im + dmass·reset)``
+            # with ``dmass`` a driver-side literal taken from an
+            # Observation riding the state write. Per-row arithmetic is
+            # unchanged (a literal and a broadcast column hold the same
+            # double), so ranks are bit-identical to the broadcast
+            # formulation — but the dangling broadcast job and the sums
+            # persist/unpersist are gone: the whole superstep is the
+            # state-write job.
+            if reset is not None:
+                teleport_c = F.lit(1.0 - damping) * reset
+
+                def rank_of(dm):
+                    return teleport_c + F.lit(damping) * (
+                        F.col("im") + F.lit(dm) * reset
+                    )
+
+            else:
+                teleport_c = F.lit((1.0 - damping) / n)
+
+                def rank_of(dm):
+                    return teleport_c + F.lit(damping) * (
+                        F.col("im") + F.lit(dm) / n
+                    )
+
+            state_rank = F.col("rank")
+            for it in range(1, max_iter + 1):
+                t_step = time.time()
+                sums = salted_gather(
+                    adj,
+                    state.select("v_id", state_rank.alias("score")),
+                    "src",
+                    "dst",
+                    salt_partitions,
+                )
+                new_state = verts.join(
+                    sums.hint("shuffle_hash"), "v_id", "left"
+                ).select("v_id", F.coalesce("x", F.lit(0.0)).alias("im"))
+                obs = Observation(f"pr_dm_{it}_{id(store)}")
+                saved = store.save(
+                    new_state.observe(obs, F.sum("im").alias("s")), it
+                )
+                dmass = 1.0 - float(obs.get["s"] or 0.0)
+                state = saved
+                state_rank = rank_of(dmass)
+                info.iterations = it
+                info.superstep_secs.append(round(time.time() - t_step, 3))
+
+            result = state.select("v_id", state_rank.alias("rank"))
+            if info.iterations > 0:
+                result = truncate_lineage(result)
+            adj.unpersist()
+            verts.unpersist()
+            store.close()
+            return result, info
+
+        for it in range(start_iter + 1, max_iter + 1):
+            t_step = time.time()
+            sums = salted_gather(
+                adj,
+                state.select("v_id", F.col("rank").alias("score")),
+                "src",
+                "dst",
+                salt_partitions,
+            )
+
+            # dangling mass via the conservation invariant: 1-row
+            # broadcast cross join, computed in-plan from sums. sums is
+            # persisted for the superstep so the broadcast subquery and
+            # the main join share ONE computation of the contribs chain.
+            sums = sums.persist()
+            dangling_df = sums.agg(
+                (F.lit(1.0) - F.coalesce(F.sum("x"), F.lit(0.0))).alias("dmass")
+            )
+            base = verts if not check_convergence else state
+            # Personalized runs teleport (and re-inject dangling mass)
+            # through the reset vector instead of uniformly; Σreset = 1
+            # keeps the Σrank = 1 conservation invariant that the
+            # dangling trick depends on. The uniform branch keeps its
+            # original literal arithmetic so un-seeded results stay
+            # bit-identical.
+            if reset is not None:
+                teleport = F.lit(1.0 - damping) * reset
+                dangling_term = F.col("dmass") * reset
+            else:
+                teleport = F.lit((1.0 - damping) / n)
+                dangling_term = F.col("dmass") / n
+            new_state = (
+                base.join(sums.hint("shuffle_hash"), "v_id", "left")
+                .crossJoin(F.broadcast(dangling_df))
+                .select(
+                    "v_id",
+                    (
+                        teleport
+                        + F.lit(damping)
+                        * (F.coalesce("x", F.lit(0.0)) + dangling_term)
+                    ).alias("rank"),
+                    *(
+                        [F.col("rank").alias("rank_prev")]
+                        if check_convergence
+                        else []
+                    ),
+                )
+            )
+
+            # The L1 convergence delta rides the state write for free:
+            # df.observe() computes it inside the write job, so
+            # convergence mode no longer pays a second scan of the
+            # saved state per superstep (round-1 fixed-cost finding).
+            # rank_prev is consumed by the observation and never
+            # written.
+            obs = None
+            to_save = new_state
+            if check_convergence:
+                obs = Observation(f"pr_l1_{it}")
+                to_save = new_state.observe(
+                    obs,
+                    F.sum(F.abs(F.col("rank") - F.col("rank_prev"))).alias("d"),
+                ).select("v_id", "rank")
+            if checkpoint is not None:
+                saved = checkpoint.save(
+                    it, to_save, {"tol": tol, "damping": damping}
+                )
+            else:
+                saved = store.save(to_save, it)
+
             info.iterations = it
+            if check_convergence:
+                delta = float(obs.get["d"])
+                info.deltas.append(delta)
+                if checkpoint is not None:
+                    checkpoint.update_metrics(it, {"l1_delta": delta})
+            sums.unpersist()
+            state = saved.select("v_id", "rank")
             info.superstep_secs.append(round(time.time() - t_step, 3))
 
-        result = state.select("v_id", state_rank.alias("rank"))
-        if info.iterations > 0:
-            result = truncate_lineage(result)
+            if check_convergence and delta < n * tol:
+                info.converged = True
+                break
+
         adj.unpersist()
         verts.unpersist()
-        store.close()
+        # Detach the result from the ephemeral store before deleting it.
+        result = state.select("v_id", "rank")
+        if store is not None and info.iterations > start_iter:
+            result = truncate_lineage(result)
+            store.close()
         return result, info
-
-    for it in range(start_iter + 1, max_iter + 1):
-        t_step = time.time()
-        # shuffle_hash hint: the state side comes from a checkpoint
-        # scan with unknown stats, so Catalyst would fall back to a
-        # sort-merge join and RE-SORT the cached adjacency every
-        # superstep (observed in explain()).
-        joined = adj.join(
-            state.select(F.col("v_id").alias("src"), "rank").hint("shuffle_hash"),
-            "src",
-        )
-        salt_cols = ["salt"] if info.salted else []
-        if use_csr:
-            # |V|-row join above; the |E|-sized scatter is a map-side
-            # explode after it
-            contribs = joined.select(
-                *salt_cols, F.col("rank"), F.explode("adj").alias("a")
-            ).select(
-                *salt_cols,
-                F.col("a.dst").alias("dst"),
-                (F.col("a.p") * F.col("rank")).alias("m"),
-            )
-        else:
-            contribs = joined.select(
-                *salt_cols, "dst", (F.col("p") * F.col("rank")).alias("m")
-            )
-        if info.salted:
-            sums = (
-                contribs.groupBy("dst", "salt")
-                .agg(F.sum("m").alias("c"))
-                .groupBy("dst")
-                .agg(F.sum("c").alias("in_mass"))
-            )
-        else:
-            sums = contribs.groupBy("dst").agg(F.sum("m").alias("in_mass"))
-
-        # dangling mass via the conservation invariant: 1-row broadcast
-        # cross join, computed in-plan from sums. sums is persisted for
-        # the superstep so the broadcast subquery and the main join
-        # share ONE computation of the contribs chain.
-        sums = sums.persist()
-        dangling_df = sums.agg(
-            (F.lit(1.0) - F.coalesce(F.sum("in_mass"), F.lit(0.0))).alias("dmass")
-        )
-        base = verts if not check_convergence else state
-        # Personalized runs teleport (and re-inject dangling mass)
-        # through the reset vector instead of uniformly; Σreset = 1
-        # keeps the Σrank = 1 conservation invariant that the dangling
-        # trick depends on. The uniform branch keeps its original
-        # literal arithmetic so un-seeded results stay bit-identical.
-        if reset is not None:
-            teleport = F.lit(1.0 - damping) * reset
-            dangling_term = F.col("dmass") * reset
-        else:
-            teleport = F.lit((1.0 - damping) / n)
-            dangling_term = F.col("dmass") / n
-        new_state = (
-            base.join(
-                sums.withColumnRenamed("dst", "v_id").hint("shuffle_hash"),
-                "v_id",
-                "left",
-            )
-            .crossJoin(F.broadcast(dangling_df))
-            .select(
-                "v_id",
-                (
-                    teleport
-                    + F.lit(damping)
-                    * (
-                        F.coalesce("in_mass", F.lit(0.0))
-                        + dangling_term
-                    )
-                ).alias("rank"),
-                *(
-                    [F.col("rank").alias("rank_prev")]
-                    if check_convergence
-                    else []
-                ),
-            )
-        )
-
-        # The L1 convergence delta rides the state write for free:
-        # df.observe() computes it inside the write job, so convergence
-        # mode no longer pays a second scan of the saved state per
-        # superstep (round-1 fixed-cost finding). rank_prev is consumed
-        # by the observation and never written.
-        obs = None
-        to_save = new_state
-        if check_convergence:
-            from pyspark.sql import Observation
-
-            obs = Observation(f"pr_l1_{it}")
-            to_save = new_state.observe(
-                obs, F.sum(F.abs(F.col("rank") - F.col("rank_prev"))).alias("d")
-            ).select("v_id", "rank")
-        if checkpoint is not None:
-            saved = checkpoint.save(
-                it, to_save, {"tol": tol, "damping": damping}
-            )
-        else:
-            saved = store.save(to_save, it)
-
-        info.iterations = it
-        if check_convergence:
-            delta = float(obs.get["d"])
-            info.deltas.append(delta)
-            if checkpoint is not None:
-                checkpoint.update_metrics(it, {"l1_delta": delta})
-        sums.unpersist()
-        state = saved.select("v_id", "rank")
-        info.superstep_secs.append(round(time.time() - t_step, 3))
-
-        if check_convergence and delta < n * tol:
-            info.converged = True
-            break
-
-    adj.unpersist()
-    verts.unpersist()
-    # Detach the result from the ephemeral store before deleting it.
-    result = state.select("v_id", "rank")
-    if store is not None and info.iterations > start_iter:
-        result = truncate_lineage(result)
-        store.close()
-    return result, info

@@ -50,6 +50,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from cminer_spark.operators.graph import _und_sym, vertex_ids
 from cminer_spark.plans.checkpoint import (
     EphemeralStateStore,
     SuperstepCheckpoint,
@@ -177,22 +178,8 @@ def pregel_components(
     :func:`~cminer_spark.operators.components.hashmin_components`
     (same symmetrization, same update, bit-identical labels at every
     round; parity-tested + gate-shared oracle)."""
-    sym = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .distinct()
-    )
-    sym = (
-        sym.union(sym.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .distinct()
-        .select(F.col("u").alias("src"), F.col("v").alias("dst"))
-    )
-    all_v = edges.select(F.col("src").alias("v_id")).union(
-        edges.select(F.col("dst").alias("v_id"))
-    )
-    if vertices is not None:
-        all_v = all_v.union(vertices.select("v_id"))
-    state0 = all_v.distinct().select(
+    sym = _und_sym(edges).toDF("src", "dst")
+    state0 = vertex_ids(edges, vertices).select(
         "v_id", F.col("v_id").alias("component")
     )
     labels, _info = pregel(

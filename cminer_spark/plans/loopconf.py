@@ -15,9 +15,9 @@ queries are wrong inside such a loop:
   loop.  With AQE off a whole superstep is ONE scheduler job.
 * **``spark.sql.shuffle.partitions``** is sized for the session, not
   the graph.  Supersteps should shuffle into a partition count derived
-  from the input size (~250k rows/partition, capped at the session
-  setting) so a 100k-edge graph runs 1-partition shuffles while a
-  66M-edge graph keeps the full spread — the same rule at every scale,
+  from the input size (``ROWS_PER_PARTITION`` rows/partition, capped at
+  the session setting) so a 30k-edge graph runs 1-partition shuffles
+  while a 66M-edge graph keeps the full spread — the same rule at every scale,
   never a constant tuned to the local core count.
 
 :func:`superstep_conf` applies both for the duration of the loop and

@@ -140,30 +140,56 @@ def test_resume_after_convergence_is_noop(spark, tmp_ckpt):
     assert g1 == g2
 
 
-def test_pagerank_csr_path_matches_flat(spark):
-    """use_csr=True (gather from CSR adjacency blocks) must produce
-    ranks allclose to the flat pair-adjacency path, salted and not."""
-    import random
+def _job_count(spark, group, fn):
+    """Run ``fn`` under a fresh job group; return ``(jobs it ran, its
+    result)``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
 
+
+@pytest.mark.parametrize(
+    "salt, seeds", [(None, None), (1, None), (4, None), (None, [7, 3])]
+)
+def test_fixed_k_fast_path(spark, salt, seeds):
+    """``tol=0`` without a checkpoint takes the fixed-k path: exact
+    parity with the unrolled oracle, salted or not, and ONE scheduler
+    job per superstep."""
     rng = random.Random(12)
     pairs = [(rng.randrange(50), rng.randrange(50)) for _ in range(260)]
-    pairs += [(i, 7) for i in range(50)]  # a hub to exercise salting
-    df = edges_df(spark, [p for p in pairs if p[0] != p[1]])
-    flat, fi = pagerank(df, tol=1e-9, max_iter=40)
-    csr, ci = pagerank(df, tol=1e-9, max_iter=40, use_csr=True)
-    g1 = {r.v_id: r.rank for r in flat.collect()}
-    g2 = {r.v_id: r.rank for r in csr.collect()}
-    assert g1.keys() == g2.keys()
-    a = np.array([g1[k] for k in sorted(g1)])
-    b = np.array([g2[k] for k in sorted(g2)])
-    assert np.allclose(a, b, atol=1e-12)
-    assert fi.n_edges == ci.n_edges
-    # forced salting on the csr path
-    csr_s, si = pagerank(df, tol=1e-9, max_iter=40, use_csr=True, salt_partitions=4)
-    assert si.salted
-    g3 = {r.v_id: r.rank for r in csr_s.collect()}
-    c = np.array([g3[k] for k in sorted(g3)])
-    assert np.allclose(a, c, atol=1e-12)
+    pairs += [(i, 7) for i in range(50)]  # a hub at vertex 7
+    pairs = [p for p in pairs if p[0] != p[1]]
+    df = edges_df(spark, pairs).persist()
+    df.count()
+
+    def run(k):
+        return _job_count(
+            spark,
+            f"pr_fixed_k_{salt}_{seeds is not None}_{k}",
+            lambda: pagerank(
+                df, tol=0.0, max_iter=k, salt_partitions=salt, seeds=seeds
+            ),
+        )
+
+    jobs2, _ = run(2)
+    jobs6, (ranks, info) = run(6)
+    assert info.iterations == 6 and not info.converged
+    assert info.salted == (salt == 4)
+    assert jobs6 - jobs2 == 4
+
+    got = {r.v_id: r.rank for r in ranks.collect()}
+    want = pagerank_oracle(
+        [(s, d, 1.0) for s, d in pairs], tol=0.0, max_iter=6, seeds=seeds
+    )
+    assert got.keys() == want.keys()
+    a = np.array([got[k] for k in sorted(got)])
+    b = np.array([want[k] for k in sorted(want)])
+    assert np.allclose(a, b, atol=1e-12), np.abs(a - b).max()
+    df.unpersist()
 
 
 def test_personalized_seeds_parity(spark):

@@ -32,25 +32,31 @@ def test_filter_and_projection_pushed_to_scan(spark):
     assert "text" not in read_schema
 
 
-def test_pagerank_superstep_uses_shuffle_hash_join(spark):
-    """Build one superstep's plan shape by hand (adjacency ⋈ state
-    from a freshly-scanned checkpoint) and assert no SortMergeJoin."""
+def test_pagerank_superstep_uses_shuffle_hash_join(spark, tmp_path):
+    """Build one superstep's gather with the shared engine helper
+    (adjacency ⋈ state freshly scanned from parquet, as after a
+    checkpoint) and assert no SortMergeJoin, salted or not."""
     from cminer_spark.operators import extract_edges, pagerank
+    from cminer_spark.operators.graph import salted_gather
     from cminer_spark.synth import synth_transcripts
 
     t = synth_transcripts(spark, n_convs=40, seed=2)
     edges = extract_edges(t)
     ranks, _info = pagerank(edges, tol=1e-6, max_iter=3)
-    # the returned frame reads the final superstep state; join shape is
-    # checked on a reconstructed superstep:
-    adj = edges.groupBy("src", "dst").agg(F.sum("weight").alias("w"))
-    state = ranks.select(F.col("v_id").alias("src"), "rank").hint("shuffle_hash")
-    step = adj.join(state, "src").groupBy("dst").agg(
-        F.sum(F.col("w") * F.col("rank")).alias("m")
-    )
-    plan = _plan(step)
-    assert "ShuffledHashJoin" in plan
-    assert "SortMergeJoin" not in plan
+    ranks.write.parquet(str(tmp_path / "state"))
+    state = spark.read.parquet(str(tmp_path / "state"))
+    adj = edges.select("src", "dst", F.col("weight").alias("w"))
+    for salt in (1, 4):
+        step = salted_gather(
+            adj,
+            state.select("v_id", F.col("rank").alias("score")),
+            "src",
+            "dst",
+            salt,
+        )
+        plan = _plan(step)
+        assert "ShuffledHashJoin" in plan
+        assert "SortMergeJoin" not in plan
 
 
 def test_line_dedup_keep_first_has_no_sort_window(spark):
